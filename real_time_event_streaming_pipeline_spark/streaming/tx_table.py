@@ -56,18 +56,28 @@ Scale posture: an upsert epoch rewrites only the buckets its keys
 hash into — cost O(table x |affected| / n_buckets), same as the
 copy-on-write sink — and, unlike the overwrite sink, writes land in a
 FRESH directory while old files are read, so no localCheckpoint
-materialization barrier is needed. The manifest lists file paths, not
-file contents: at 100 TB with thousands of buckets it stays a few MB
-of JSON, and the single put-if-absent commit is the same O(1)
-metadata operation Delta runs on S3. Bucket pruning happens at the
-manifest (driver) level — a point lookup reads only the one bucket's
-files, no directory listing at all.
+materialization barrier is needed. A commit's cost follows what it
+touches:
+
+- **Write**: one file per touched bucket, through
+  ``min(n_buckets, defaultParallelism)`` write tasks — a 20-row epoch
+  into a 64-bucket table runs a few tasks, not 64 (``_write_txn_files``).
+- **Read**: readers hand the manifest's explicit file list to the
+  parquet reader. The session's listing threshold (``session.get_spark``)
+  keeps resolving that list on the driver, one file status per path
+  and no Spark job, up to 2048 paths; bucket pruning at the
+  manifest level means a point lookup resolves one bucket's files.
+- **Commit**: the manifest lists file paths, not file contents: at
+  100 TB with thousands of buckets it stays a few MB of JSON, and the
+  single put-if-absent commit is the same O(1) metadata operation
+  Delta runs on S3.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 from collections.abc import Callable
 
@@ -595,6 +605,11 @@ def history(table_dir: str) -> list[dict]:
 # ------------------------------------------------------------- write
 
 
+def _new_txn_rel(version: int) -> str:
+    """A fresh transaction directory name, relative to ``data/``."""
+    return f"txn-{version:010d}-{uuid.uuid4().hex[:8]}"
+
+
 def _write_txn_files(
     merged: DataFrame,
     table_dir: str,
@@ -603,6 +618,7 @@ def _write_txn_files(
     max_records_per_file: int | None = None,
     presorted: bool = False,
     n_buckets: int | None = None,
+    txn_rel: str | None = None,
 ) -> list[dict]:
     """Write one transaction's data files under a fresh directory and
     return manifest entries. `partitionBy` on a duplicated bucket
@@ -611,36 +627,27 @@ def _write_txn_files(
     lists, no hive discovery); the hive dirs are renamed to plain
     names so Spark never infers a partition column from them.
 
-    ``n_buckets`` (r14): the bucket column has at most this many
-    distinct values, so the pre-write shuffle is sized to exactly that
-    — without it the repartition inherits the session's AQE initial
-    partition count (256 locally) for a ≤n_buckets-value key space,
-    paying empty-task scheduling and an AQE coalesce pass per commit
-    by construction. Two buckets hashing to one partition is fine:
-    partitionBy still writes one file per bucket value."""
-    txn_rel = f"txn-{version:010d}-{uuid.uuid4().hex[:8]}"
+    Write shape: the rows are hash-partitioned on the bucket into
+    ``min(n_buckets, defaultParallelism)`` tasks. Every bucket lands
+    wholly in one task, and the planned write sorts each task by the
+    partition column, so a commit writes exactly one file per touched
+    bucket (``max_records_per_file`` may split an oversized one) —
+    Delta's optimized write as one shuffle. The task count follows
+    the cores, not the key space, so a small epoch does not pay for
+    one mostly empty task per bucket. Without ``n_buckets`` the shuffle takes the session's partition
+    count. ``presorted=True`` (compact) skips the shuffle: its input
+    is already partitioned by bucket and row-clustered, and a second
+    shuffle would scramble that clustering.
+
+    ``txn_rel`` names the transaction directory; by default a fresh
+    ``txn-<version>-<uuid>`` name is drawn."""
+    txn_rel = txn_rel or _new_txn_rel(version)
     txn_abs = os.path.join(_data_dir(table_dir), txn_rel)
-    # OPTIMIZED WRITE (r8 verdict #1): repartition by bucket before the
-    # partitioned write. Without it each of the writer's input
-    # partitions emits one file PER bucket it contains — a 32-partition
-    # dedupe shuffle × 16 buckets wrote ~128-500 row files per commit,
-    # and since readers take explicit file lists, every subsequent
-    # read_table / DV scan paid per-file planning+footer cost that
-    # COMPOUNDED across the lifecycle's commits (the measured source of
-    # the full-sweep regression: 242 manifest files by v1 at sf0.1).
-    # Hash-repartitioning on the bucket value lands each bucket wholly
-    # in one task → exactly one file per touched bucket;
-    # maxRecordsPerFile still splits oversized buckets at scale, and
-    # AQE coalesces the tiny-commit shuffle. This is Delta's
-    # optimizeWrite bin-packing, expressed as one Spark shuffle.
-    # ``presorted=True`` (compact) skips it: the input is already
-    # repartitioned by bucket AND row-clustered (sort/Z-order), and a
-    # second shuffle would scramble exactly the clustering compact
-    # exists to create.
     out = merged.withColumn("_kb_part", F.col("kb"))
     if not presorted:
         if n_buckets is not None:
-            out = out.repartition(int(n_buckets), F.col("_kb_part"))
+            tasks = min(int(n_buckets), merged.sparkSession.sparkContext.defaultParallelism)
+            out = out.repartition(tasks, F.col("_kb_part"))
         else:
             out = out.repartition(F.col("_kb_part"))
     writer = out.write.partitionBy("_kb_part")
@@ -806,13 +813,15 @@ def _dv_write_sidecar(
     cand_entries: list[dict],
     matches,
     counts: dict,
+    txn_rel: str | None = None,
 ) -> list[dict]:
     """Phase 2 of a DV commit: write the sidecar (new matches ∪ the
     touched files' carried-forward old DV rows) and return the
     replacement manifest entries. Separated from phase 1 so callers
     with an independent append (UPDATE/MERGE's rewritten rows) can
     overlap the two writes (guide §2.6) — both read the persisted
-    candidate scan phase 1 already materialized."""
+    candidate scan phase 1 already materialized. ``txn_rel`` names
+    the transaction directory, as in ``_write_txn_files``."""
     sidecar = matches
     old_dv_dirs = sorted({f["dv"] for f in cand_entries if f.get("dv")})
     if old_dv_dirs:
@@ -826,11 +835,10 @@ def _dv_write_sidecar(
         )
         carried = old_dv.filter(F.col("_file").isin(sorted(counts)))
         sidecar = sidecar.unionByName(carried)
-    txn_rel = f"txn-{new_version:010d}-{uuid.uuid4().hex[:8]}"
-    dv_rel = f"{txn_rel}/_dv"
+    dv_rel = f"{txn_rel or _new_txn_rel(new_version)}/_dv"
     # partition the sidecar BY FILE: a commit deleting billions of
     # rows across many files writes one sidecar file per data-file
-    # group instead of funnelling through a single writer. r14: the
+    # group instead of funnelling through a single writer. The
     # shuffle is sized to the touched-file count (the key space's
     # exact cardinality) instead of the AQE initial partition count —
     # a point delete writes through 1 partition, not a 256-partition
@@ -847,6 +855,55 @@ def _dv_write_sidecar(
         else:
             out.append(e)
     return out
+
+
+def _dv_write_with_append(
+    spark: SparkSession,
+    table_dir: str,
+    new_version: int,
+    cand_entries: list[dict],
+    matches,
+    counts: dict,
+    rows: DataFrame | None,
+    stats_cols: list[str] | None,
+    n_buckets: int,
+) -> tuple[list[dict], list[dict]]:
+    """Phase 2 of a DV commit that also appends ``rows`` (UPDATE's or
+    MERGE's rewritten and inserted rows): the sidecar write and the
+    append are independent writes over the candidate scan phase 1
+    materialized, so they run overlapped, each into its
+    own transaction directory. Returns (replacement entries, appended
+    entries); the caller's commit publishes both or neither.
+
+    If either write fails, both directories are removed best-effort
+    once the other write has finished, then the first error is
+    raised: the commit never happens, so nothing can reference them.
+    Whatever the removal misses is an unreferenced file that
+    ``vacuum`` sweeps."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    rels = [_new_txn_rel(new_version), _new_txn_rel(new_version)]
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futs = [
+            pool.submit(
+                _dv_write_sidecar, spark, table_dir, new_version,
+                cand_entries, matches, counts, txn_rel=rels[0],
+            )
+        ]
+        if rows is not None:
+            futs.append(
+                pool.submit(
+                    _write_txn_files, rows, table_dir, new_version,
+                    stats_cols=stats_cols, n_buckets=n_buckets, txn_rel=rels[1],
+                )
+            )
+    # leaving the pool waited for both writes
+    errors = [e for e in (f.exception() for f in futs) if e is not None]
+    if errors:
+        for rel in rels:
+            shutil.rmtree(os.path.join(_data_dir(table_dir), rel), ignore_errors=True)
+        raise errors[0]
+    return futs[0].result(), (futs[1].result() if rows is not None else [])
 
 
 def upsert(
@@ -1376,27 +1433,11 @@ def merge(
                 for p in parts[1:]:
                     merged = merged.unionByName(p)
             if mode == "dv" and dv_plan is not None:
-                # overlap the two independent writes (sidecar + append)
-                # over the already-materialized candidate scan
-                from concurrent.futures import ThreadPoolExecutor
-
                 matches, counts = dv_plan
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    f_side = pool.submit(
-                        _dv_write_sidecar, spark, table_dir, old_version + 1,
-                        cand, matches, counts,
-                    )
-                    f_app = (
-                        pool.submit(
-                            _write_txn_files, merged, table_dir, old_version + 1,
-                            stats_cols=old_manifest.get("stats_cols"),
-                            n_buckets=n_buckets,
-                        )
-                        if merged is not None
-                        else None
-                    )
-                    cand_entries = f_side.result()
-                    new_entries = f_app.result() if f_app is not None else []
+                cand_entries, new_entries = _dv_write_with_append(
+                    spark, table_dir, old_version + 1, cand, matches, counts,
+                    merged, old_manifest.get("stats_cols"), n_buckets,
+                )
             elif merged is not None:
                 new_entries = _write_txn_files(
                     merged, table_dir, old_version + 1,
@@ -1512,23 +1553,11 @@ def update_where(
                 updated_rows = _apply(
                     live_pos.drop("_file", "_pos").filter(matched), always=True
                 )
-                # the sidecar and the updated-row append are
-                # independent writes over the scan the count job just
-                # materialized — overlap them (guide §2.6); the commit
-                # below still publishes both atomically or neither
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    f_side = pool.submit(
-                        _dv_write_sidecar, spark, table_dir, old_version + 1,
-                        candidates, matches, counts,
-                    )
-                    f_app = pool.submit(
-                        _write_txn_files, updated_rows, table_dir, old_version + 1,
-                        stats_cols=old_manifest.get("stats_cols"),
-                        n_buckets=old_manifest["n_buckets"],
-                    )
-                    new_cand, appended = f_side.result(), f_app.result()
+                new_cand, appended = _dv_write_with_append(
+                    spark, table_dir, old_version + 1, candidates, matches, counts,
+                    updated_rows, old_manifest.get("stats_cols"),
+                    old_manifest["n_buckets"],
+                )
             finally:
                 live_pos.unpersist()
             files = keep + new_cand + appended
@@ -1658,8 +1687,6 @@ def clone(
     a producer replaying an already-applied epoch into the clone is
     deduped exactly as it would be on the source. The clone manifest
     records its lineage under ``source``."""
-    import shutil
-
     if mode not in ("shallow", "deep"):
         raise ValueError(f"mode must be 'shallow' or 'deep', got {mode!r}")
     snap = snapshot(src_dir, version)

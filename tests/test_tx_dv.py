@@ -962,3 +962,41 @@ def test_concurrent_schema_evolution_merge_compaction(spark, tmp_path):
                     state.append((r.k, r.v, r.w))
         state.sort(key=str)
         assert state == content_at(v), f"replay diverged at v{v}"
+
+
+@pytest.mark.parametrize("failing", ["_dv_write_sidecar", "_write_txn_files"])
+@pytest.mark.parametrize("op", ["update_where", "merge"])
+def test_dv_overlapped_write_failure_leaves_no_txn_dir(spark, tmp_path, monkeypatch,
+                                                       op, failing):
+    """UPDATE/MERGE in dv mode overlap the sidecar write and the row
+    append. When one of them fails after writing its files, the
+    sibling's transaction directory (and its own) must be removed
+    before the error propagates: no orphaned txn dir is left under
+    data/, and the table still reads as the previous snapshot."""
+    tx = str(tmp_path / "tx")
+    _build(spark, tx)
+    data = pathlib.Path(tx) / "data"
+    dirs_before = {p.name for p in data.iterdir()}
+    v_before, want = tx_table.latest_version(tx), _content(spark, tx)
+
+    real = getattr(tx_table, failing)
+
+    def write_then_crash(*a, **k):
+        real(*a, **k)
+        raise RuntimeError("injected write failure")
+
+    monkeypatch.setattr(tx_table, failing, write_then_crash)
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        if op == "update_where":
+            tx_table.update_where(spark, tx, F.col("k") == "a", {"v": F.lit(100)},
+                                  epoch_id=40, mode="dv")
+        else:
+            tx_table.merge(spark, tx,
+                           spark.createDataFrame([("a", 100), ("z", 50)], "k string, v int"),
+                           when_matched_update={"v": F.col("_src_v")},
+                           epoch_id=40, mode="dv")
+    monkeypatch.undo()
+
+    assert {p.name for p in data.iterdir()} == dirs_before
+    assert tx_table.latest_version(tx) == v_before
+    assert _content(spark, tx) == want

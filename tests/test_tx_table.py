@@ -1015,3 +1015,65 @@ def test_tx_clone_carries_dv_state_and_ledger(spark, tmp_path):
         assert tx_table.latest_version(dst) == v_before
         assert {(r.k, r.v) for r in tx_table.read_table(spark, dst)
                 .select("k", "v").collect()} == want
+
+
+def _jobs_started_by(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return its result and the
+    ids of the Spark jobs it started, oldest first."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _bucket_of(spark, keys, n_buckets):
+    return {
+        r.kb
+        for r in spark.createDataFrame([(k,) for k in keys], "k string")
+        .select(F.pmod(F.xxhash64("k"), F.lit(n_buckets)).cast("int").alias("kb"))
+        .distinct()
+        .collect()
+    }
+
+
+def test_tx_small_upsert_write_tasks_bounded_by_cores(spark, tmp_path):
+    """A 20-row epoch into a 64-bucket table writes exactly one file
+    per touched bucket, and its write stage runs at most
+    defaultParallelism tasks — not one task per bucket."""
+    tx = str(tmp_path / "tx")
+    tx_table.upsert(spark, tx, _batch(spark, [(f"key{i}", i) for i in range(200)]),
+                    ["k"], n_buckets=64, order_col="v", epoch_id=0)
+    rows = [(f"key{i}", 1000 + i) for i in range(0, 400, 20)]  # 10 old keys, 10 new
+    v, jobs = _jobs_started_by(
+        spark, f"tx-upsert-{tmp_path.name}",
+        lambda: tx_table.upsert(spark, tx, _batch(spark, rows), ["k"], n_buckets=64,
+                                order_col="v", epoch_id=1),
+    )
+    old = {f["path"] for f in tx_table.read_manifest(tx, 0)["files"]}
+    fresh = [f for f in tx_table.read_manifest(tx, v)["files"] if f["path"] not in old]
+    touched = _bucket_of(spark, [k for k, _ in rows], 64)
+    assert sorted(f["kb"] for f in fresh) == sorted(touched)  # one file per bucket
+    # the write is the upsert's last job; its result stage is the write
+    st = spark.sparkContext.statusTracker()
+    write_stage = st.getStageInfo(max(st.getJobInfo(jobs[-1]).stageIds))
+    assert write_stage.numTasks <= min(64, spark.sparkContext.defaultParallelism)
+    got = _content(spark, tx)
+    assert len(got) == 210 and ("key20", 1020) in got and ("key380", 1380) in got
+
+
+def test_tx_read_table_resolves_manifest_without_spark_job(spark, tmp_path):
+    """Building the DataFrame over a manifest of more than 32 files
+    (Spark's default parallel-listing threshold) resolves the file
+    list on the driver: no Spark job starts before an action."""
+    tx = str(tmp_path / "tx")
+    tx_table.upsert(spark, tx, _batch(spark, [(f"key{i}", i) for i in range(400)]),
+                    ["k"], n_buckets=64, order_col="v", epoch_id=0)
+    assert len(tx_table.read_manifest(tx, 0)["files"]) > 32
+    df, jobs = _jobs_started_by(
+        spark, f"tx-read-{tmp_path.name}", lambda: tx_table.read_table(spark, tx)
+    )
+    assert jobs == []
+    assert df.count() == 400
